@@ -11,12 +11,10 @@ line, and without "queries" it was empty every round (PERF_r15.json
 n_common: 0).  The full multi-pass detail is still written to
 BENCH_DETAIL.json next to this script.
 
-r16 cold-store mode (VERDICT r15 item 4): SPARK_GRAFT_COLD_STORE=1
-removes the at-rest substrate store (spark-warehouse/_shared_graphs)
-once BEFORE pass 1, so the first lens query of pass 1 pays each frame's
-build; comparing a cold-store total against a default (warm-store) total
-quantifies exactly how much the inherited cross-run store is worth to
-the bench.  Default behavior (unset) is byte-identical to r15.
+Cold store: the at-rest substrate store (spark-warehouse/_shared_graphs)
+is deleted BEFORE pass 1, so the first lens query of pass 1 pays each
+frame's build and the bench measures the code, not frames left by an
+earlier run.  The driver heap is a quarter of the host's memory.
 
 Execution is forced through the noop sink (df.write.format("noop")) so the
 timing covers scan -> compute -> (would-be) write without driver-side
@@ -46,6 +44,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
 import time
 
@@ -62,6 +62,13 @@ def _sf_label(sf_dir: str) -> float | str:
         except ValueError:
             pass
     return base
+
+
+def _driver_memory() -> str:
+    """A quarter of the host's memory (MemTotal), at least 1 GiB."""
+    with open("/proc/meminfo") as fh:
+        mem_kib = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    return f"{max(1024, mem_kib // 1024 // 4)}m"
 
 
 def _warm_python_pools(spark) -> None:
@@ -103,6 +110,9 @@ def _clear_persisted(spark) -> None:
 
 
 def main() -> None:
+    from simple_land_registry_data_ingestion_spark.operators.substrate import (
+        store_root,
+    )
     from simple_land_registry_data_ingestion_spark.session import get_spark
 
     import __spark_entry__ as entry_mod
@@ -110,25 +120,18 @@ def main() -> None:
     # 300+ queries x 2 passes run in ONE local JVM where the driver also
     # hosts every broadcast and the localCheckpoint block store; the
     # default 1g heap OOMs in BroadcastExchange late in the run (observed
-    # at ~the 600th noop save).  A real heap matches what any cluster
-    # driver would get; has no effect if a session already exists.
+    # at ~the 600th noop save).  A quarter of the host's memory leaves the
+    # rest to the Python workers and the OS; has no effect if a session
+    # already exists.
     spark = get_spark(
         app_name="simple-land-registry-bench",
-        extra_conf={"spark.driver.memory": "48g"},
+        extra_conf={"spark.driver.memory": _driver_memory()},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entry_mod.queries()
 
-    cold_store = os.environ.get("SPARK_GRAFT_COLD_STORE", "") not in ("", "0")
-    if cold_store:
-        import shutil
-
-        from simple_land_registry_data_ingestion_spark.operators.substrate import (
-            store_root,
-        )
-
-        shutil.rmtree(store_root(), ignore_errors=True)
+    shutil.rmtree(store_root(), ignore_errors=True)
 
     # Warmup: JVM, codegen, parquet footer caches.
     queries["q1_pricing_summary"](spark, SF_DIR).write.format("noop").mode(
@@ -169,8 +172,7 @@ def main() -> None:
     }
 
     total = round(sum(timings.values()), 3)
-    ordered = sorted(timings.values())
-    median = round(ordered[len(ordered) // 2], 3) if ordered else 0.0
+    median = round(statistics.median(timings.values()), 3) if timings else 0.0
     two_draw_total = round(
         sum(min(p[name] for p in passes[:2]) for name in passes[0]), 3
     )
@@ -193,8 +195,6 @@ def main() -> None:
         # are no longer empty
         "queries": timings,
     }
-    if cold_store:
-        summary["cold_store"] = True
     with open(detail_path, "w") as fh:
         json.dump(
             {

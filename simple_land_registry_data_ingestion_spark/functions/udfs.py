@@ -132,6 +132,10 @@ def _gini_np(v: pd.Series) -> float:
     return float((2.0 * (idx * x).sum()) / (n * total) - (n + 1.0) / n)
 
 
+def _count_np(v: pd.Series) -> int:
+    return len(v)
+
+
 def pandas_grouped_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom AGGREGATE in Python: per-status Gini concentration of order
     values, as a GROUPED_AGG pandas UDF — the Spark shape for aggregates
@@ -143,11 +147,12 @@ def pandas_grouped_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups is the DEMO of the API, not the production key choice; salt or
     pre-aggregate hot keys).  Rounded to 6 dp so numpy's pairwise summation
     and the oracle's sequential SUM agree."""
-    gini = F.pandas_udf(_gini_np, "double", F.PandasUDFType.GROUPED_AGG)
+    # Series -> scalar type hints make both UDFs grouped aggregates.
+    gini = F.pandas_udf(_gini_np, "double")
     # Spark forbids mixing GROUPED_AGG pandas UDFs with JVM aggregates in
     # one agg (INVALID_PANDAS_UDF_PLACEMENT), so the row count is a second
     # pandas aggregate over the same Arrow batch.
-    n = F.pandas_udf(lambda v: len(v), "long", F.PandasUDFType.GROUPED_AGG)
+    n = F.pandas_udf(_count_np, "long")
     orders = load(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_orderstatus")

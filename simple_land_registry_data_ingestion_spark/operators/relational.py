@@ -7209,18 +7209,20 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1d = F.col("n1").cast("double")
     n2d = F.col("n2").cast("double")
     mu = 2.0 * n1d * n2d / (n1d + n2d) + 1.0
-    var = (
-        2.0 * n1d * n2d * (2.0 * n1d * n2d - n1d - n2d)
-        / ((n1d + n2d) * (n1d + n2d) * (n1d + n2d - 1.0))
+    # try_divide: a one-sided series (n1 or n2 = 0) has zero variance and a
+    # single signed hour has n1 + n2 - 1 = 0; z is NULL there, as in DuckDB.
+    var = F.try_divide(
+        2.0 * n1d * n2d * (2.0 * n1d * n2d - n1d - n2d),
+        (n1d + n2d) * (n1d + n2d) * (n1d + n2d - 1.0),
     )
     return runs.select(
         "event_type",
         F.col("n1").alias("n_above"),
         F.col("n2").alias("n_below"),
         "n_runs",
-        F.round((F.col("n_runs").cast("double") - mu) / F.sqrt(var), 6).alias(
-            "z_score"
-        ),
+        F.round(
+            F.try_divide(F.col("n_runs").cast("double") - mu, F.sqrt(var)), 6
+        ).alias("z_score"),
     )
 
 

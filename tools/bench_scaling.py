@@ -415,9 +415,13 @@ def main() -> None:
             f"ambient load {load1:.1f} > 4.0 — a steal window is active; "
             "wait for quiet or set SCALING_FORCE=1"
         )
-    # 10x data in one local JVM needs a real heap (default local heap is 1g)
+    # 10x data in one local JVM needs a real heap (default local heap is 1g):
+    # a quarter of the host's memory (MemTotal), at least 1 GiB
+    with open("/proc/meminfo") as fh:
+        mem_kib = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
     spark = get_spark(
-        app_name="bench-scaling", extra_conf={"spark.driver.memory": "48g"}
+        app_name="bench-scaling",
+        extra_conf={"spark.driver.memory": f"{max(1024, mem_kib // 1024 // 4)}m"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     # events.parquet is written LAST, so its presence implies a complete build

@@ -1,4 +1,4 @@
-import os, sys, time, shutil
+import os, sys, time, shutil, statistics
 sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 from simple_land_registry_data_ingestion_spark.session import get_spark
@@ -30,7 +30,7 @@ for p in range(4):
         t = time.monotonic(); noop(f()); res[n]["warm"].append(round(time.monotonic()-t,3))
 for n, _ in frames:
     c, w = sorted(res[n]["cold"]), sorted(res[n]["warm"])
-    med = lambda xs: xs[len(xs)//2]
+    med = statistics.median
     print(f"{n}: cold min={c[0]:.2f} med={med(c):.2f} | warm min={w[0]:.2f} med={med(w):.2f} | build≈{med(c)-med(w):.2f}")
 print("raw:", res)
 spark.stop()
