@@ -124,13 +124,10 @@ class _Entry(NamedTuple):
 _REGISTRY: dict[str, _Entry] = {}
 
 
-#: PARAMETER COUPLING: each oracle string inlines the literal value of its
-#: operator's DEFAULT keyword arguments (e.g. basket_part_pairs
-#: min_support=2, supplier_otif sla_days=60, er_sorted_neighborhood window
-#: gap 1..3, similarity_recall_at_k k=10).  The driver always calls the
-#: operators with defaults, so the pair stays in lockstep; anyone invoking an
-#: operator with a non-default argument must adjust the twin SQL to match —
-#: there is no runtime signal tying the two constants together.
+#: PARAMETER COUPLING: each oracle string inlines its operator's keyword
+#: defaults as SQL literals.  Only defaults that some caller overrides are
+#: kept; tests/test_oracle_parity.py::test_operator_defaults_are_the_kept_ones
+#: lists them and fails when that set changes.
 def _register(name: str, fn: _Query, oracle_sql: str) -> None:
     """Register query ``name``: its operator and its DuckDB twin SQL."""
     if name in _REGISTRY:
@@ -161,6 +158,13 @@ _SHINGLES_CTE = r"""
                ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2] AS shingle
         FROM docs, UNNEST(range(1, len(ws) - 1)) AS t(i))
 """
+
+#: The CDC queries' 'new' price: re-priced and rounded in DECIMAL, then cast
+#: to double, as relational._cdc_snapshots does; other prices pass through.
+_CDC_NEW_PRICE = """
+    CASE WHEN substring(md5('mod:' || CAST(o_orderkey AS VARCHAR)), 1, 1) IN ('0', '1')
+         THEN CAST(ROUND(CAST(o_totalprice AS DECIMAL(15, 2)) * 1.1, 2) AS DOUBLE)
+         ELSE o_totalprice END"""
 
 _VEC_CTE = """
     v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
@@ -869,11 +873,8 @@ _register("agg_histogram_bins", relational.agg_histogram_bins, """
 # The merge's correctness contract IS the oracle: applying the derived
 # I/U/D batch to the 'old' snapshot must reproduce the 'new' snapshot
 # exactly, so the twin computes 'new' directly.
-_register("cdc_merge_upsert", relational.cdc_merge_upsert, """
-        SELECT o_orderkey,
-               ROUND(CASE WHEN substring(md5('mod:' || CAST(o_orderkey AS VARCHAR)), 1, 1)
-                               IN ('0', '1')
-                          THEN o_totalprice * 1.1 ELSE o_totalprice END, 2) AS price
+_register("cdc_merge_upsert", relational.cdc_merge_upsert, f"""
+        SELECT o_orderkey, {_CDC_NEW_PRICE} AS price
         FROM orders
         WHERE substring(md5('new:' || CAST(o_orderkey AS VARCHAR)), 1, 1) <> '0'
     """)
@@ -1554,16 +1555,13 @@ _register("window_rank_family", relational.window_rank_family, """
         WINDOW w AS (PARTITION BY o_orderstatus
                      ORDER BY o_totalprice DESC, o_orderkey)
     """)
-_register("cdc_snapshot_diff", relational.cdc_snapshot_diff, """
+_register("cdc_snapshot_diff", relational.cdc_snapshot_diff, f"""
         WITH old AS (
             SELECT o_orderkey AS key, o_totalprice AS old_price
             FROM orders
             WHERE substring(md5('old:' || CAST(o_orderkey AS VARCHAR)), 1, 1) <> '0'),
         new AS (
-            SELECT o_orderkey AS key,
-                   ROUND(CASE WHEN substring(md5('mod:' || CAST(o_orderkey AS VARCHAR)), 1, 1)
-                                   IN ('0', '1')
-                              THEN o_totalprice * 1.1 ELSE o_totalprice END, 2) AS new_price
+            SELECT o_orderkey AS key, {_CDC_NEW_PRICE} AS new_price
             FROM orders
             WHERE substring(md5('new:' || CAST(o_orderkey AS VARCHAR)), 1, 1) <> '0')
         SELECT COALESCE(old.key, new.key) AS o_orderkey,

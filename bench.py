@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark harness: run every queries() entry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+Without SPARK_GRAFT_CPUS it uses every core this process may run on.
 
 The FINAL stdout line is one JSON record {"metric", "value", "unit",
 "sf", "n_queries", ..., "queries": {name: sec}}.  r16 (VERDICT r15 item

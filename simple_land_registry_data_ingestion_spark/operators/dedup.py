@@ -309,9 +309,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_candidate_pairs(load(spark, sf_dir, "documents"))
 
 
-def dedup_jaccard_lsh(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30
-) -> DataFrame:
+def dedup_jaccard_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard scored ONLY on MinHash-LSH candidate pairs
     — the composition that scales: candidate generation is O(n) bucketed
     (never all-pairs, never a shingle self-join whose stop-shingle hot keys
@@ -335,7 +333,7 @@ def dedup_jaccard_lsh(
     scored = scored.withColumn(
         "jaccard", F.round(inter / (F.col("n_a") + F.col("n_b") - inter), 6)
     )
-    return scored.where(F.col("jaccard") >= threshold).select(
+    return scored.where(F.col("jaccard") >= 0.30).select(
         "doc_a", "doc_b", "jaccard"
     )
 
@@ -388,9 +386,7 @@ def _minhash_candidate_sets(docs: DataFrame) -> DataFrame:
     return cand.join(sa, "doc_a").join(sb, "doc_b")
 
 
-def dedup_containment_lsh(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.50
-) -> DataFrame:
+def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASYMMETRIC near-dup scoring on MinHash-LSH candidates: containment
     c(A in B) = |A∩B| / |A| (and the reverse) — the measure that catches
     SUBSET duplication Jaccard misses: a paragraph quoted whole inside a
@@ -399,9 +395,10 @@ def dedup_containment_lsh(
 
     Same scaled shape as dedup_jaccard_lsh (shared front half): O(n)
     bucketed candidate generation, exact set intersection only on
-    candidate pairs.  Emitted when EITHER direction crosses the threshold;
+    candidate pairs.  Emitted when EITHER direction crosses the 0.5 threshold;
     both directions are reported so the caller can tell subset from
     superset."""
+    threshold = 0.50
     scored = _minhash_candidate_sets(load(spark, sf_dir, "documents"))
     inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("long")
     out = scored.select(
@@ -494,12 +491,10 @@ def ngram_jaccard_pairs(
     )
 
 
-def dedup_ngram_jaccard(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30
-) -> DataFrame:
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: exact n-gram Jaccard with the stop-shingle guard
     active (df cap = MAX_SHINGLE_DF; oracle applies the identical filter)."""
-    return ngram_jaccard_pairs(load(spark, sf_dir, "documents"), threshold)
+    return ngram_jaccard_pairs(load(spark, sf_dir, "documents"), 0.30)
 
 
 # ---------------------------------------------------------------------------
@@ -1028,12 +1023,9 @@ def shared_minhash_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def dedup_embedding_lsh(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup, bucketed: sign-LSH bucket -> exact in-bucket
-    cosine -> threshold.  The registered PRIMARY embedding near-dup query;
+    cosine -> threshold 0.30.  The registered PRIMARY embedding near-dup query;
     dedup_embedding_cosine is the brute-force verification baseline.
 
     Scale shape: every vector lands in exactly ONE 8-plane sign bucket
@@ -1041,8 +1033,8 @@ def dedup_embedding_lsh(
     layout is O(n) and the quadratic is strictly in-bucket; at 100 TB the
     bucket is the at-rest partition key and this whole job is
     partition-local.  Recall knob: fewer planes or multi-band bucketing
-    (more candidates); ``max_bucket_size`` bounds adversarial hot buckets
-    (see bucket_pairs).  Norms are computed once per vector, joined back by
+    (more candidates); bucket_pairs' ``max_bucket_size`` (unset here) bounds
+    adversarial hot buckets.  Norms are computed once per vector, joined back by
     id — never re-folded per pair."""
     from simple_land_registry_data_ingestion_spark.operators.similarity import (
         signature_bits,
@@ -1059,9 +1051,7 @@ def dedup_embedding_lsh(
         F.array_sort(F.collect_list("vec_id")).alias("ids")
     )
     # Buckets partition the vectors, so pairs are already unique.
-    cand = bucket_pairs(
-        grouped, out_a="vec_a", out_b="vec_b", max_bucket_size=max_bucket_size
-    )
+    cand = bucket_pairs(grouped, out_a="vec_a", out_b="vec_b")
     va = with_bucket.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"),
         F.col("nrm").alias("na"),
@@ -1075,13 +1065,12 @@ def dedup_embedding_lsh(
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
         .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= 0.30)
     )
 
 
 def dedup_embedding_cosine(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30,
-    max_vectors: int = 8000, n_blocks: int = 16,
+    spark: SparkSession, sf_dir: str, threshold: float = 0.30, max_vectors: int = 8000,
 ) -> DataFrame:
     """Near-duplicate vectors: pairs with cosine >= threshold.
 
@@ -1103,7 +1092,7 @@ def dedup_embedding_cosine(
     a float64 BLAS matmul — n^2 * dim FLOPs at memory bandwidth instead of
     interpreter dispatch (2000 vectors x dim 64 = 0.25 GFLOP, milliseconds
     in numpy vs seconds interpreted).  Each vector ships to ``n_blocks``
-    partner groups, so the shuffle is n_blocks * corpus-sized — linear,
+    = 16 partner groups, so the shuffle is n_blocks * corpus-sized — linear,
     with a knob: pick n_blocks ~ cluster cores / replication tolerance.
     Pair orientation: a pair lands in exactly one (min_blk, max_blk)
     group and the in-task ``id_a < id_b`` mask emits it once.  The UDF
@@ -1127,6 +1116,7 @@ def dedup_embedding_cosine(
     must cover that whole band — the previous 1e-9 could drop a boundary
     pair the oracle admits."""
     import pandas as pd  # local import: keep module import light
+    n_blocks = 16
 
     guard_msg = (
         f"dedup_embedding_cosine is the all-pairs VERIFICATION baseline, "
@@ -1321,9 +1311,7 @@ def split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_incremental_minhash(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30
-) -> DataFrame:
+def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL near-dup: score a new batch against the existing corpus
     without ever comparing corpus x corpus.
 
@@ -1392,7 +1380,7 @@ def dedup_incremental_minhash(
     scored = scored.withColumn(
         "jaccard", F.round(inter / (F.col("n_c") + F.col("n_i") - inter), 6)
     )
-    return scored.where(F.col("jaccard") >= threshold).select(
+    return scored.where(F.col("jaccard") >= 0.30).select(
         "inc_doc", "corpus_doc", "jaccard"
     )
 
@@ -1494,8 +1482,7 @@ def dedup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_semdedup(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.32,
-    row_block: int = 2048,
+    spark: SparkSession, sf_dir: str, row_block: int = 2048,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by
     cluster-then-prune — k-means clusters bound the quadratic, then only
@@ -1514,13 +1501,14 @@ def dedup_semdedup(
     2. assign: argmax 6-dp cosine against broadcast centroids, ties on
        centroid_id;
     3. prune: within each cluster, a vector is DROPPED when any
-       lower-vec_id cluster-mate has cosine >= threshold (keep-first by
+       lower-vec_id cluster-mate has cosine >= 0.32 (keep-first by
        id — deterministic, and the paper's keep-one-per-group semantics).
 
     Output: every vector with its cluster and the keep/drop decision."""
     from simple_land_registry_data_ingestion_spark.operators.similarity import (
         kmeans_refine_centroids,
     )
+    threshold = 0.32
 
     emb = fan_out(load(spark, sf_dir, "embeddings"))
     cent = kmeans_refine_centroids(emb)
@@ -1989,9 +1977,7 @@ def shared_prefix_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_jaccard_prefix(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: lossless prefix-filtered exact Jaccard join at
     t=0.5; the oracle is the UNPRUNED brute-force join, so a green row
     certifies the completeness guarantee end-to-end.
@@ -2005,7 +1991,7 @@ def dedup_jaccard_prefix(
     the ``dedup_prefix_index_build`` producer row, registered the same
     round per the r13 substrate accounting rule."""
     return _prefix_join_from_index(
-        shared_prefix_index(spark, sf_dir), threshold, True
+        shared_prefix_index(spark, sf_dir), 0.5, True
     ).verified
 
 
@@ -2204,7 +2190,7 @@ def dedup_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_lsh_scurve(spark: SparkSession, sf_dir: str, sample: int = 200) -> DataFrame:
+def dedup_lsh_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical LSH S-CURVE certification: on a bounded doc sample, score
     EVERY pair's exact Jaccard, flag whether the banded MinHash made it a
     candidate, and compare the per-decile candidate rate against the
@@ -2219,12 +2205,12 @@ def dedup_lsh_scurve(spark: SparkSession, sf_dir: str, sample: int = 200) -> Dat
     fact, not a docstring claim.
 
     Scale shape: the all-pairs scoring is deliberately bounded to
-    ``sample`` docs (sample^2/2 pairs — an EVALUATION, like
+    200 docs (200^2/2 pairs — an EVALUATION, like
     similarity_recall_at_k, never run corpus-wide); signature and band
     computation reuse the per-doc pipeline.  The theoretical curve uses
     explicit multiplication (q*q*q), not pow(), so both engines produce
     identical doubles."""
-    docs = load(spark, sf_dir, "documents").where(F.col("doc_id") < sample)
+    docs = load(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     sh = shingle_table(docs)
     sets = sh.groupBy("doc_id").agg(
         F.collect_set("shingle").alias("sh_set"),
@@ -2317,11 +2303,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_tfidf_cosine(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.30,
-    df_cap: int = 10,
-    docs: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None,
 ) -> DataFrame:
     """Sparse TF-IDF cosine similarity join via an INVERTED INDEX — the
     text-similarity-at-scale shape (term-at-a-time posting-list join,
@@ -2337,7 +2319,7 @@ def dedup_tfidf_cosine(
 
     Scale discipline is candidates-then-verify (the LSH/PPJoin split):
     pair CANDIDATES are generated only inside posting lists with
-    df in [2, df_cap] (stopword-grade lists would go quadratic), but
+    df in [2, 10] (stopword-grade lists would go quadratic), but
     every candidate is then VERIFIED with its FULL cosine over all
     shared terms — so the cap bounds the quadratic without biasing the
     score (a first cut that also dropped capped terms from SCORING went
@@ -2450,7 +2432,7 @@ def dedup_tfidf_cosine(
     # nrm > 0 guard (ADVICE r14): on a degenerate corpus where a doc's
     # every term has df == n_corpus, all w_int are 0, nrm is 0, and a
     # surviving pair would emit NaN (0/0) — which Spark's NaN ordering
-    # would pass through the >= threshold filter.  Free on real corpora
+    # would pass through the >= 0.30 filter.  Free on real corpora
     # (no zero norms at any tested sf), restores the r13 contract.
     norms = w.groupBy("doc_id").agg(
         F.sqrt(
@@ -2458,7 +2440,7 @@ def dedup_tfidf_cosine(
             .cast("double")
         ).alias("nrm")
     ).where(F.col("nrm") > 0)
-    postings = w.where((F.col("df") >= 2) & (F.col("df") <= df_cap))
+    postings = w.where((F.col("df") >= 2) & (F.col("df") <= 10))
     grouped = postings.groupBy("term").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
@@ -2526,7 +2508,7 @@ def dedup_tfidf_cosine(
         dots.join(na, "doc_a")
         .join(nb, "doc_b")
         .select("doc_a", "doc_b", cosine.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= 0.30)
     )
 
 
@@ -2535,11 +2517,7 @@ def dedup_tfidf_cosine(
 # ---------------------------------------------------------------------------
 
 def dedup_link_prediction(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 50,
-    verify_distance: int = 2,
-    degree_cap: int = 64,
+    spark: SparkSession, sf_dir: str, k: int = 50, degree_cap: int = 64,
 ) -> DataFrame:
     """Common-neighbor link prediction over the SimHash candidate graph —
     the "probable missed duplicate" triage queue: two documents that are
@@ -2550,7 +2528,7 @@ def dedup_link_prediction(
     Kleinberg 2003).
 
     Dataflow: STRICTLY-verified pairs (dedup_simhash_pairs at nibble
-    distance <= ``verify_distance`` = 2 — one notch TIGHTER than the
+    distance <= 2 — one notch TIGHTER than the
     dedup threshold, deliberately: the prediction targets are exactly
     the pairs the loose threshold would have admitted, and wedge cost is
     Σdeg² over the graph, which the tighter verify cuts ~4x on a
@@ -2589,26 +2567,16 @@ def dedup_link_prediction(
 
     Output: (u, w, common, union_size, nbr_jaccard), top ``k``.
     """
-    # r12: thresholds <= 3 slice the shared at-rest graph (banding-
-    # invariance makes the slice exact — shared_simhash_graph docstring);
-    # wider thresholds fall back to a live build.  The parquet scan is
-    # cheap and re-executable, so the old eager checkpoint (which existed
-    # to keep the fingerprint subtree from replaying into the adjacency
-    # AND the anti-join) is no longer needed.
-    if verify_distance <= 3:
-        edges = (
-            shared_simhash_graph(spark, sf_dir)
-            .where(F.col("nibble_distance") <= verify_distance)
-            .select("doc_a", "doc_b")
-        )
-    else:
-        edges = (
-            dedup_simhash_pairs(
-                spark, sf_dir, max_nibble_distance=verify_distance
-            )
-            .select("doc_a", "doc_b")
-            .localCheckpoint(eager=True)
-        )
+    # r12: the edges slice the shared at-rest graph (banding-invariance
+    # makes the slice exact — shared_simhash_graph docstring).  The parquet
+    # scan is cheap and re-executable, so no eager checkpoint is needed to
+    # keep the fingerprint subtree from replaying into the adjacency AND
+    # the anti-join.
+    edges = (
+        shared_simhash_graph(spark, sf_dir)
+        .where(F.col("nibble_distance") <= 2)
+        .select("doc_a", "doc_b")
+    )
     adj_full = edges.select(
         F.col("doc_a").alias("n"), F.col("doc_b").alias("nbr")
     ).unionAll(
@@ -2688,9 +2656,7 @@ def dedup_link_prediction(
 # k-core peeling over the candidate graph (round 6)
 # ---------------------------------------------------------------------------
 
-def dedup_kcore_peel(
-    spark: SparkSession, sf_dir: str, k: int = 2, rounds: int = 3
-) -> DataFrame:
+def dedup_kcore_peel(spark: SparkSession, sf_dir: str, rounds: int = 3) -> DataFrame:
     """k-core decomposition (bounded peel) of the SimHash candidate graph
     — the third graph-structure lens next to triangle_stats (clique vs
     star) and dedup_link_prediction (missed edges): nodes that survive
@@ -2700,7 +2666,7 @@ def dedup_kcore_peel(
     deciding which clusters deserve transitive-closure dedup.
 
     Semantics: ``rounds`` synchronized peel iterations at threshold
-    ``k`` — each round computes every remaining node's degree (0 for
+    ``k`` = 2 — each round computes every remaining node's degree (0 for
     nodes whose neighbors all peeled), removes those below ``k``
     recording (round, degree-at-decision), and restricts the adjacency
     to survivors.  The loop is UNROLLED (fixed round count, same as the
@@ -2721,6 +2687,7 @@ def dedup_kcore_peel(
 
     Output: (doc_id, peeled_round, last_degree) — peeled_round 1..R, or
     0 for survivors (last_degree = degree in the final graph)."""
+    k = 2
     if rounds < 1:
         raise ValueError(f"dedup_kcore_peel requires rounds >= 1, got {rounds}")
     # r12: the edge list comes from the shared at-rest graph store
@@ -2875,9 +2842,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def graph_label_propagation(
-    spark: SparkSession, sf_dir: str, rounds: int = 3
-) -> DataFrame:
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (Raghavan et al.) over the
     MinHash-LSH candidate graph — COMMUNITY detection, the softer
     cousin of connected components: where CC merges everything
@@ -2894,8 +2859,6 @@ def graph_label_propagation(
     one per-node top-1 window over the count table (bounded by degree),
     the same linear-shuffle loop as pagerank_centrality, lineage
     truncated per round.  Output: every document's community label."""
-    if rounds < 1:
-        raise ValueError("rounds >= 1 required")
     docs = load(spark, sf_dir, "documents")
     cand = shared_minhash_graph(spark, sf_dir)  # at-rest lens substrate (r12)
     und = (
@@ -2909,7 +2872,7 @@ def graph_label_propagation(
     labels = docs.select(
         F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
     )
-    for _ in range(rounds):
+    for _ in range(3):
         counts = (
             und.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"), "label")

@@ -50,9 +50,9 @@ def shared_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def shared_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNFILTERED co-purchase pair counts ``(part_a < part_b,
-    pair_orders)`` at rest — consumers apply their own ``min_support`` /
-    ``min_cooc`` cuts at read time (predicate pushdown into the scan), so
-    one frame serves every parameterization.  Its row set doubles as the
+    pair_orders)`` at rest — consumers apply their own support cuts
+    (>= 2 orders, >= 3 co-occurrences) at read time (predicate pushdown
+    into the scan), so one frame serves every consumer.  Its row set doubles as the
     distinct co-purchase EDGE list (each unordered pair appears exactly
     once), which is what the degree-distribution lenses consume.  Built
     FROM the at-rest basket (cascaded substrate; fingerprint keys on
@@ -100,11 +100,7 @@ def user_part_edges(spark: SparkSession, sf_dir: str, part_col: str = "p") -> Da
     )
 
 
-def er_blocked_match(
-    spark: SparkSession,
-    sf_dir: str,
-    max_edit_distance: int = 4,
-) -> DataFrame:
+def er_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution by blocking + in-block edit-distance scoring over
     the part catalog: candidate pairs form only inside a
     ``(name noun, brand)`` block, then ``levenshtein`` scores each pair.
@@ -131,6 +127,7 @@ def er_blocked_match(
     A viral block now costs vocab² DP + output-linear expansion instead
     of corpus² DP.
     """
+    max_edit_distance = 4
     part = load(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
@@ -189,11 +186,7 @@ def er_blocked_match(
     )
 
 
-def basket_part_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    min_support: int = 2,
-) -> DataFrame:
+def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence with lift: which part pairs appear in
     the same order more often than chance (A-priori's frequent-pair pass,
     and the same shape as token-PMI in a text pipeline).
@@ -245,7 +238,7 @@ def basket_part_pairs(
         .where(F.col("part_a") < F.col("part_b"))
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).cast("long").alias("pair_orders"))
-        .where(F.col("pair_orders") >= F.lit(min_support))
+        .where(F.col("pair_orders") >= F.lit(2))
     )
     freq_a = item_freq.select(
         F.col("part_id").alias("part_a"), F.col("item_orders").alias("orders_a")
@@ -273,19 +266,14 @@ def basket_part_pairs(
     )
 
 
-def er_sorted_neighborhood(
-    spark: SparkSession,
-    sf_dir: str,
-    neighborhood: int = 3,
-    max_edit_distance: int = 4,
-) -> DataFrame:
+def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood record linkage (Hernandez-Stolfo merge/purge):
     sort candidates by a discriminating key and compare each record only
-    to its ``neighborhood`` successors in sort order.
+    to its 3 successors in sort order.
 
     The complement to er_blocked_match: blocking bounds pairs by block
     size (and dies on one viral block), sorted-neighborhood bounds pairs
-    at exactly ``n * neighborhood`` regardless of key skew — a hot key
+    at exactly ``3n`` regardless of key skew — a hot key
     just means similar records sit adjacent, which is the method working
     as intended.  Here both compose: rank within the (noun) block by
     (name, key), then pair ranks at gap 1..w via a pure EQUI-join on
@@ -306,7 +294,7 @@ def er_sorted_neighborhood(
         "p_name",
         F.row_number().over(w).alias("rnk"),
     )
-    offsets = F.array(*[F.lit(g) for g in range(1, neighborhood + 1)])
+    offsets = F.array(*[F.lit(g) for g in range(1, 4)])
     probes = ranked.select(
         "block_noun",
         F.col("p_partkey").alias("p1"),
@@ -331,13 +319,11 @@ def er_sorted_neighborhood(
             F.col("gap").cast("long").alias("rank_gap"),
             F.levenshtein("name1", "name2").cast("long").alias("edit_distance"),
         )
-        .where(F.col("edit_distance") <= F.lit(max_edit_distance))
+        .where(F.col("edit_distance") <= F.lit(4))
     )
 
 
-def er_golden_record(
-    spark: SparkSession, sf_dir: str, max_edit_distance: int = 2
-) -> DataFrame:
+def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record construction (survivorship) on top of entity
     resolution: blocked edit-distance matches (er_blocked_match, but at
     a TIGHTER max_edit_distance=2 — merging is destructive, so the match
@@ -374,6 +360,7 @@ def er_golden_record(
     multi-member groups survive as single-group entities (coalesce to
     own root); singleton parts with no match drop at n_members >= 2."""
     import pandas as pd
+    max_edit_distance = 2
 
     part = load(spark, sf_dir, "part").select(
         "p_partkey",
@@ -457,9 +444,7 @@ def er_golden_record(
     )
 
 
-def er_edit_distance(
-    spark: SparkSession, sf_dir: str, max_ed: int = 1
-) -> DataFrame:
+def er_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typo-tolerant entity resolution via FastSS / SymSpell DELETION
     NEIGHBORHOODS: two strings are within edit distance 1 only if they
     share a member of {s} ∪ {s with one char deleted} — so candidates
@@ -478,7 +463,7 @@ def er_edit_distance(
     = n-1 with a min1/min2 self-exclusion; cross-name neighbors from the
     verified name-pair list).  The part table never self-joins.
 
-    Output: one row per part with >= 1 neighbor at ed <= max_ed (0 or 1
+    Output: one row per part with >= 1 neighbor at ed <= 1 (0 or 1
     edits), its neighbor count, and the smallest neighbor key."""
     parts = load(spark, sf_dir, "part").select(
         "p_partkey", F.lower(F.col("p_name")).alias("nm")
@@ -511,7 +496,7 @@ def er_edit_distance(
         .select("nm_a", "nm_b")
         .distinct()
     )
-    matched = cand.where(F.levenshtein("nm_a", "nm_b") <= max_ed)
+    matched = cand.where(F.levenshtein("nm_a", "nm_b") <= 1)
     sym = matched.unionAll(
         matched.select(
             F.col("nm_b").alias("nm_a"), F.col("nm_a").alias("nm_b")
@@ -553,12 +538,7 @@ def er_edit_distance(
     )
 
 
-def item_item_cf(
-    spark: SparkSession,
-    sf_dir: str,
-    min_cooc: int = 3,
-    top_k: int = 3,
-) -> DataFrame:
+def item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative filtering ("customers who bought X also
     bought Y"): cosine similarity on the order co-occurrence matrix with
     top-k neighbor selection per item — the classic Amazon-style
@@ -573,16 +553,16 @@ def item_item_cf(
     basket-bounded (k(k-1)/2 per order, k ~ 4), never catalog^2; the
     per-item order counts broadcast; the top-k neighbor cut is a window
     partitioned BY ITEM over the pair table, which is already
-    min_cooc-pruned — at 100 TB this is two keyed shuffles (pair
+    pruned at cooc >= 3 — at 100 TB this is two keyed shuffles (pair
     groupBy, item window) plus two broadcast joins.  Ties on cosine
     break deterministically (higher cooc, then lower neighbor id).
 
     Output: (part_id, neighbor_id, cooc, cosine, rk) — both directions
-    of each pair, rk 1..top_k per part.
+    of each pair, rk 1..3 per part.
 
     r12: the basket and its pair counts come from the shared at-rest
     substrate (shared_basket_items / shared_copurchase_pairs) — the
-    min_cooc cut pushes into the pair-store scan, and no order-key
+    cooc >= 3 cut pushes into the pair-store scan, and no order-key
     shuffle remains anywhere in the plan."""
     items = shared_basket_items(spark, sf_dir)
     item_orders = items.groupBy("part_id").agg(
@@ -590,7 +570,7 @@ def item_item_cf(
     )
     pairs = shared_copurchase_pairs(spark, sf_dir).select(
         "part_a", "part_b", F.col("pair_orders").alias("cooc")
-    ).where(F.col("cooc") >= F.lit(min_cooc))
+    ).where(F.col("cooc") >= F.lit(3))
     # both directions so every item sees its full neighbor list
     sym = pairs.select("part_a", "part_b", "cooc").unionAll(
         pairs.select(
@@ -626,7 +606,7 @@ def item_item_cf(
     )
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= top_k)
+        .where(F.col("rk") <= 3)
     )
 
 
@@ -761,9 +741,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_textrank_keywords(
-    spark: SparkSession, sf_dir: str, top_k: int = 15
-) -> DataFrame:
+def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau): PageRank over the
     word-adjacency graph — a keyword is a word that co-occurs with many
     other well-connected words, which catches multi-word-topic anchors
@@ -775,7 +753,7 @@ def text_textrank_keywords(
     stay as teleport-only nodes.  The rank loop REUSES
     pagerank_centrality (operators/dedup.py) — 3 unrolled damped
     iterations with every contribution and rank quantized 8 dp so float
-    summation order cannot diverge between engines.  Output: top_k words
+    summation order cannot diverge between engines.  Output: top 15 words
     by (rank desc, word asc) — a total order, so the cut is exact.
 
     Scale: edge building is scan-stage; the loop is the same
@@ -816,7 +794,7 @@ def text_textrank_keywords(
     return (
         pr.select(F.col("node").alias("word"), F.col("rank").alias("textrank"))
         .orderBy(F.col("textrank").desc(), F.col("word"))
-        .limit(top_k)
+        .limit(15)
     )
 
 

@@ -291,10 +291,8 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_stratified_fixed(
-    spark: SparkSession, sf_dir: str, per_stratum: int = 50
-) -> DataFrame:
-    """Fixed-size stratified sample: exactly ``per_stratum`` rows per
+def sample_stratified_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-size stratified sample: exactly 50 rows per
     market segment, chosen by KEY-HASH order — every stratum is represented
     equally regardless of its population (the eval-set/holdout construction
     a training pipeline needs; uniform sampling starves rare strata).
@@ -309,7 +307,7 @@ def sample_stratified_fixed(
     )
     return (
         customer.withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("sample_rank") <= per_stratum)
+        .where(F.col("sample_rank") <= 50)
         .select("c_custkey", "c_mktsegment", "sample_rank")
     )
 
@@ -320,16 +318,14 @@ def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return customer.select("c_mktsegment", "c_nationkey").distinct()
 
 
-def sample_source_capped(
-    spark: SparkSession, sf_dir: str, cap: int = 10
-) -> DataFrame:
+def sample_source_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document cap — the per-domain cap every crawl-derived
     training pipeline applies so one prolific domain cannot dominate the
     mix (the C4/RefinedWeb 'top sites' guard).
 
     Within each source, documents are ranked by md5(doc_id) (pseudorandom
     but reproducible across runs/engines/partitionings, tie-break on the
-    id) and only the first ``cap`` survive.  One shuffle on source; the
+    id) and only the first 10 survive.  One shuffle on source; the
     per-group state is the window's bounded rank counter, so a source with
     10^9 docs costs the same per-row work as one with 10.  A skewed mega-
     source is the one hot key — at 100 TB pre-aggregate with the salted
@@ -340,7 +336,7 @@ def sample_source_capped(
     )
     return (
         docs.withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("sample_rank") <= cap)
+        .where(F.col("sample_rank") <= 10)
         .select("doc_id", "source", "sample_rank")
     )
 
@@ -554,19 +550,17 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize_events(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
+def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization: assign each event a per-user session id — a new
     session starts when the gap to the previous event reaches
-    ``gap_minutes``.  The batch twin of the streaming session window
+    30 minutes.  The batch twin of the streaming session window
     (streaming/ops.stream_session_window): same lag -> new-session flag ->
     running-sum pattern, one shuffle on user_id, both window frames reuse
     the same sorted run.  session_id is (user_id, seq) — deterministic and
     stable under reprocessing, which is what downstream joins key on."""
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev_us = F.lag(ts_us).over(w)
     new_session = F.when(
@@ -669,12 +663,10 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_weighted_aes(
-    spark: SparkSession, sf_dir: str, k: int = 50
-) -> DataFrame:
+def sample_weighted_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement (Efraimidis-Spirakis A-ES):
     each doc draws a deterministic uniform u from md5(doc_id) and ranks by
-    ln(u)/weight — the top-k by that key is an exact weighted sample, here
+    ln(u)/weight — the top-50 by that key is an exact weighted sample, here
     weighted by token count (the quality-weighted subsampling step of a
     training-data pipeline: longer/heavier docs proportionally likelier,
     yet the draw is reproducible across runs, engines, partitionings).
@@ -701,20 +693,18 @@ def sample_weighted_aes(
             key.alias("sample_key"),
         )
         .orderBy(F.col("sample_key").desc(), F.col("doc_id"))
-        .limit(k)
+        .limit(50)
     )
 
 
-def agg_histogram_bins(
-    spark: SparkSession, sf_dir: str, bin_width: float = 5000.0
-) -> DataFrame:
+def agg_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of lineitem extended prices: bin index, row
     count, bin min/max — the numeric-distribution profiling pass.  One
     scan + one hash aggregate on the bin key; partial aggregation does the
     heavy lifting map-side, so the exchange carries only n_bins rows per
     task."""
     lineitem = load(spark, sf_dir, "lineitem")
-    bin_idx = F.floor(F.col("l_extendedprice") / bin_width).cast("long")
+    bin_idx = F.floor(F.col("l_extendedprice") / 5000.0).cast("long")
     return (
         lineitem.groupBy(bin_idx.alias("bin"))
         .agg(
@@ -726,9 +716,7 @@ def agg_histogram_bins(
     )
 
 
-def agg_histogram_equidepth(
-    spark: SparkSession, sf_dir: str, n_bins: int = 10
-) -> DataFrame:
+def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth (quantile) histogram of order prices: ~equal rows per
     bin, data-adaptive boundaries — the distribution profile that stays
     informative under skew where fixed-width bins collapse into one bar.
@@ -742,6 +730,7 @@ def agg_histogram_equidepth(
     aggregate, no global sort, no shuffle of the fact table.  Bins are
     ~equi-depth up to boundary ties (exact equality on the cent-rounded
     boundary keeps a tie deterministic rather than splitting it)."""
+    n_bins = 10
     orders = load(spark, sf_dir, "orders")
     fracs = [i / n_bins for i in range(1, n_bins)]
     bounds = orders.agg(
@@ -825,6 +814,32 @@ def window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cdc_snapshots(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Two versions of the orders table, carved deterministically by key
+    hash: 'old' (key, old_price) drops one md5 slice, 'new'
+    (key, new_price) drops another and re-prices a third slice by 10%.
+
+    The re-price runs in DECIMAL(15,2) x 1.1, is rounded to cents there
+    and cast back to double: rounding the double product instead lets the
+    engines disagree by a cent on products that sit at a half cent."""
+    orders = load(spark, sf_dir, "orders")
+    nib = lambda salt: F.substring(  # noqa: E731 - local shorthand
+        F.md5(F.concat(F.lit(salt), F.col("o_orderkey").cast("string"))), 1, 1
+    )
+    # the SQL literal 1.1 is DECIMAL(2,1); a Python 1.1 is a double
+    repriced = F.col("o_totalprice").cast("decimal(15,2)") * F.expr("1.1")
+    old = orders.where(nib("old:") != "0").select(
+        F.col("o_orderkey").alias("key"), F.col("o_totalprice").alias("old_price")
+    )
+    new = orders.where(nib("new:") != "0").select(
+        F.col("o_orderkey").alias("key"),
+        F.when(nib("mod:").isin("0", "1"), F.round(repriced, 2).cast("double"))
+        .otherwise(F.col("o_totalprice"))
+        .alias("new_price"),
+    )
+    return old, new
+
+
 def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff — classify every key as added / deleted / changed /
     unchanged between two table versions.  This is the change-detection
@@ -833,27 +848,12 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator is how an incremental pipeline DERIVES them, turning full
     refreshes (reference E6) into delta publishes.
 
-    The two versions are carved deterministically out of the orders table
-    by key hash (so the query is self-contained and oracle-checkable):
-    'old' drops one hash slice, 'new' drops another and re-prices a third.
-    Plan: one scan feeds both sides (Spark reuses the exchange), FULL OUTER
-    join on the key, null-pattern CASE classification — the at-scale shape
-    is a key-partitioned sort-merge join, linear in both snapshots."""
-    orders = load(spark, sf_dir, "orders")
-    nib = lambda salt: F.substring(  # noqa: E731 - local shorthand
-        F.md5(F.concat(F.lit(salt), F.col("o_orderkey").cast("string"))), 1, 1
-    )
-    old = orders.where(nib("old:") != "0").select(
-        F.col("o_orderkey").alias("key"), F.col("o_totalprice").alias("old_price")
-    )
-    new = orders.where(nib("new:") != "0").select(
-        F.col("o_orderkey").alias("key"),
-        F.round(
-            F.when(nib("mod:").isin("0", "1"), F.col("o_totalprice") * 1.1)
-            .otherwise(F.col("o_totalprice")),
-            2,
-        ).alias("new_price"),
-    )
+    The two versions come from _cdc_snapshots (so the query is
+    self-contained and oracle-checkable).  Plan: one scan feeds both sides
+    (Spark reuses the exchange), FULL OUTER join on the key, null-pattern
+    CASE classification — the at-scale shape is a key-partitioned
+    sort-merge join, linear in both snapshots."""
+    old, new = _cdc_snapshots(spark, sf_dir)
     joined = old.join(new, "key", "full_outer")
     change_type = (
         F.when(F.col("old_price").isNull(), "added")
@@ -912,29 +912,13 @@ def cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     I/U/D deltas and merge.
 
     Self-verifying construction: the change batch is the diff between the
-    deterministic 'old' and 'new' snapshots (same md5 carving as
+    deterministic 'old' and 'new' snapshots (_cdc_snapshots, shared with
     cdc_snapshot_diff), so a CORRECT merge of old + batch must reproduce
     the 'new' snapshot bit-for-bit — which is exactly what the oracle
     asserts.  Any dropped delete, doubled insert, or missed update breaks
     the equality."""
-    orders = load(spark, sf_dir, "orders")
-    nib = lambda salt: F.substring(  # noqa: E731 - local shorthand
-        F.md5(F.concat(F.lit(salt), F.col("o_orderkey").cast("string"))), 1, 1
-    )
-    old = orders.where(nib("old:") != "0").select(
-        F.col("o_orderkey").alias("key"), F.col("o_totalprice").alias("price")
-    )
-    new = orders.where(nib("new:") != "0").select(
-        F.col("o_orderkey").alias("key"),
-        F.round(
-            F.when(nib("mod:").isin("0", "1"), F.col("o_totalprice") * 1.1)
-            .otherwise(F.col("o_totalprice")),
-            2,
-        ).alias("price"),
-    )
-    diff = old.select("key", F.col("price").alias("old_price")).join(
-        new.select("key", F.col("price").alias("new_price")), "key", "full_outer"
-    )
+    old, new = _cdc_snapshots(spark, sf_dir)
+    diff = old.join(new, "key", "full_outer")
     batch = diff.where(
         F.col("old_price").isNull()
         | F.col("new_price").isNull()
@@ -947,7 +931,7 @@ def cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         F.col("new_price").alias("price"),
     )
-    merged = merge_upsert(old, batch, "key")
+    merged = merge_upsert(old.withColumnRenamed("old_price", "price"), batch, "key")
     return merged.select(
         F.col("key").alias("o_orderkey"), F.col("price").alias("price")
     )
@@ -1279,9 +1263,7 @@ def profile_numeric_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_resample_ffill(
-    spark: SparkSession, sf_dir: str, max_user_id: int = 50
-) -> DataFrame:
+def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series regularization: per-user hourly grid with forward-fill —
     the gap-filling step that turns an irregular event stream into the
     fixed-step series sequence models and feature stores consume.
@@ -1295,10 +1277,10 @@ def events_resample_ffill(
     3. forward fill: last non-null value over an ordered per-user window
        (ignorenulls) — one window, linear shuffle on user_id.
 
-    ``max_user_id`` scopes the demo corpus (grid rows = users x span);
+    user_id < 50 scopes the demo corpus (grid rows = users x span);
     at scale the same plan runs per entity with the window as the only
     wide op."""
-    events = load(spark, sf_dir, "events").where(F.col("user_id") < max_user_id)
+    events = load(spark, sf_dir, "events").where(F.col("user_id") < 50)
     hours = events.select(
         "user_id",
         F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("hour_ts"),
@@ -1504,9 +1486,7 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_ema_decay(
-    spark: SparkSession, sf_dir: str, alpha: float = 0.3
-) -> DataFrame:
+def events_ema_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially-weighted engagement score — the standard
     feature-store recency decay (s_i = α·x_i + (1-α)·s_{i-1}, s_1 = x_1).
 
@@ -1521,6 +1501,7 @@ def events_ema_decay(
     iteration, no driver state.  6-dp round keeps the double sum
     hash-stable cross-engine.
     """
+    alpha = 0.3
     events = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wn = Window.partitionBy("user_id")
@@ -1734,9 +1715,7 @@ def events_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def customers_target_encoding(
-    spark: SparkSession, sf_dir: str, n_folds: int = 5
-) -> DataFrame:
+def customers_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free target encoding: each (market segment, fold) gets the
     mean order value computed from the OTHER folds only — the K-fold
     out-of-fold scheme that keeps a row's own target out of its feature
@@ -1759,7 +1738,7 @@ def customers_target_encoding(
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         "c_mktsegment",
-        F.pmod(F.col("o_orderkey"), F.lit(n_folds)).alias("fold"),
+        F.pmod(F.col("o_orderkey"), F.lit(5)).alias("fold"),
         "o_totalprice",
     )
     per_fold = seg_orders.groupBy("c_mktsegment", "fold").agg(
@@ -1894,9 +1873,7 @@ def events_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_approx_quantile_error(
-    spark: SparkSession, sf_dir: str, accuracy: int = 10000
-) -> DataFrame:
+def agg_approx_quantile_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-certifying accuracy harness for approx_percentile: for each
     requested quantile q, the sketch's returned element must sit within
     the published rank guarantee (rank within (q ± 1/accuracy)·n), checked
@@ -1928,6 +1905,7 @@ def agg_approx_quantile_error(
     localCheckpoint'd (1 row) so its three consumers cannot re-run it.
     Corpus scans: sketch, bucket counts, bucket-row pick, rank check —
     all full-parallel; the only global window folds the bucket table."""
+    accuracy = 10000
     li = load(spark, sf_dir, "lineitem").select("l_extendedprice")
     qs = [0.25, 0.5, 0.75, 0.9]
     q_arr = ", ".join(str(q) for q in qs)
@@ -2072,9 +2050,7 @@ def events_cumulative_distinct_users(
     )
 
 
-def sample_priority_estimate(
-    spark: SparkSession, sf_dir: str, k: int = 100
-) -> DataFrame:
+def sample_priority_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority sampling (Duffield-Lund-Thorup): estimate the corpus total
     token count from a k-item sample — THE estimator for subset-sum
     queries over heavy-tailed data, provably near-optimal variance among
@@ -2092,6 +2068,7 @@ def sample_priority_estimate(
     (k+1)-row frame; the exact total is one map-side-combined sum riding
     the same scan family.  At 100 TB the estimate costs one scan + a
     k-row reduction."""
+    k = 100
     docs = load(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
     u_int = sum(
@@ -2212,12 +2189,10 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_mean_shift_detect(
-    spark: SparkSession, sf_dir: str, w: int = 5, threshold: float = 80.0
-) -> DataFrame:
+def events_mean_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean-shift change detection per user: flag events where the average
-    value over the following ``w`` events diverges from the preceding
-    ``w`` by more than ``threshold`` — the windowed two-sample test that
+    value over the following ``w`` = 5 events diverges from the preceding
+    ``w`` by more than 80.0 — the windowed two-sample test that
     catches regime changes (price jumps, bot takeover, sensor drift)
     without CUSUM's sequential recursion, which no window function can
     express.
@@ -2226,6 +2201,7 @@ def events_mean_shift_detect(
     one sorted pass, both frames read from the single sorted run.  Only
     full windows test (count == w on both sides), so edges never
     false-positive.  Output is the flagged rows only: corpus-sparse."""
+    w = 5
     events = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
@@ -2244,7 +2220,7 @@ def events_mean_shift_detect(
         measured.where(
             (F.col("n_before") == w)
             & (F.col("n_after") == w)
-            & (F.abs(F.col("mean_after") - F.col("mean_before")) > threshold)
+            & (F.abs(F.col("mean_after") - F.col("mean_before")) > 80.0)
         )
         .select(
             "user_id",
@@ -2471,12 +2447,10 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def profile_k_anonymity(
-    spark: SparkSession, sf_dir: str, k: int = 5
-) -> DataFrame:
+def profile_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-anonymity audit over a quasi-identifier tuple: every
     (nation, market-segment) equivalence class with its size and a flag
-    for classes smaller than k — the table a privacy review asks for
+    for classes smaller than k = 5 — the table a privacy review asks for
     before a dataset leaves the building (small classes re-identify).
 
     One groupBy on the quasi-identifier; the summary row (min class size,
@@ -2492,26 +2466,24 @@ def profile_k_anonymity(
         F.col("c_nationkey").cast("long").alias("nationkey"),
         "c_mktsegment",
         "class_size",
-        (F.col("class_size") < k).alias("violates_k"),
+        (F.col("class_size") < 5).alias("violates_k"),
     )
 
 
-def sample_shard_routing(
-    spark: SparkSession, sf_dir: str, n_shards: int = 8
-) -> DataFrame:
+def sample_shard_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous (highest-random-weight) routing of documents to shards:
     each doc goes to argmax over shards of md5(doc:shard) — the
     consistent-placement scheme where adding or removing a shard moves
     ONLY that shard's keys (1/n of data), unlike mod-n which reshuffles
     everything.
 
-    The argmax is a row-local fold over n_shards generated hash strings
+    The argmax is a row-local fold over 8 generated hash strings
     (lexicographic max — any total order works), zero shuffle; the
     output aggregates to per-shard counts plus each shard's min/max doc
     ids as a placement fingerprint.  Balance follows from md5 uniformity;
     the count spread in the output IS the balance audit."""
     docs = load(spark, sf_dir, "documents")
-    shard_ids = F.sequence(F.lit(0), F.lit(n_shards - 1))
+    shard_ids = F.sequence(F.lit(0), F.lit(7))
     best = F.array_max(
         F.transform(
             shard_ids,
@@ -2536,11 +2508,9 @@ def sample_shard_routing(
     )
 
 
-def profile_dp_noisy_counts(
-    spark: SparkSession, sf_dir: str, epsilon: float = 1.0
-) -> DataFrame:
+def profile_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Laplace-mechanism count release, mechanism demo: per-segment
-    counts plus Laplace(1/ε) noise drawn by inverse-CDF from a
+    counts plus Laplace(1/ε) noise, ε = 1, drawn by inverse-CDF from a
     DETERMINISTIC md5 uniform — the exact arithmetic of an ε-DP count
     release, reproducible across engines and runs.
 
@@ -2567,7 +2537,6 @@ def profile_dp_noisy_counts(
     noise = (
         F.when(centered >= 0, F.lit(1.0)).otherwise(F.lit(-1.0))
         * -F.log(1.0 - 2.0 * F.abs(centered))
-        / F.lit(epsilon)
     )
     return counts.select(
         "c_mktsegment",
@@ -2747,9 +2716,7 @@ def events_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_histogram_2d(
-    spark: SparkSession, sf_dir: str, value_bin: float = 25.0
-) -> DataFrame:
+def agg_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D histogram (hour-of-day × value bin) — the heatmap backing
     every monitoring dashboard, computed as one scan to a bounded cell
     table (24 × value-range/bin cells, map-side combined).
@@ -2762,7 +2729,7 @@ def agg_histogram_2d(
     return (
         events.groupBy(
             F.hour("ts").cast("long").alias("hour_of_day"),
-            F.floor(F.col("value") / value_bin).cast("long").alias("value_bin"),
+            F.floor(F.col("value") / 25.0).cast("long").alias("value_bin"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -2836,7 +2803,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q10_returned_items(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: the top customers by revenue LOST to returned
     items in one quarter — the classic churn-investigation report.
 
@@ -2846,10 +2813,10 @@ def q10_returned_items(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFra
     semi-fact (SF·150k rows) and a forced broadcast would OOM at 100×;
     AQE still broadcasts it below the 64 MiB threshold and otherwise
     shuffles the (already k-bounded-ish) per-customer aggregate against
-    it on the customer key.  The top-k is
+    it on the customer key.  The top-20 is
     TakeOrderedAndProject on the per-customer aggregate, ordered by the
     ROUNDED revenue with the customer key as tiebreak so the cut at
-    position k is engine-exact."""
+    position 20 is engine-exact."""
     li = load(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
     orders = load(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-01-01")
@@ -2886,7 +2853,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFra
         )
         .select("c_custkey", "c_name", F.col("n_name").alias("nation"), "revenue", "n_returned")
         .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(k)
+        .limit(20)
     )
 
 
@@ -3053,9 +3020,7 @@ def orders_open_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_path_trigrams(
-    spark: SparkSession, sf_dir: str, min_count: int = 10
-) -> DataFrame:
+def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top behavioral paths of length 3 — the Sankey-diagram feed: every
     consecutive (t₋₂ → t₋₁ → t) event-type triple per user, counted
     corpus-wide.
@@ -3063,8 +3028,8 @@ def events_path_trigrams(
     Two lags over ONE per-user sorted pass (the same sort run as the
     Markov transitions — first-order chains miss exactly the patterns a
     length-3 path exposes, e.g. view→click→error vs view→click→purchase).
-    Output is bounded by |types|³ however large the corpus; min_count
-    keeps the long tail out of the report."""
+    Output is bounded by |types|³ however large the corpus; the
+    n_paths >= 10 cut keeps the long tail out of the report."""
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     triples = events.select(
@@ -3075,13 +3040,11 @@ def events_path_trigrams(
     return (
         triples.groupBy("step_1", "step_2", "step_3")
         .agg(F.count(F.lit(1)).alias("n_paths"))
-        .where(F.col("n_paths") >= min_count)
+        .where(F.col("n_paths") >= 10)
     )
 
 
-def supplier_otif_scorecard(
-    spark: SparkSession, sf_dir: str, sla_days: int = 60
-) -> DataFrame:
+def supplier_otif_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier on-time scorecard: per supplier, the share of line items
     shipped within the SLA window of the order date — the
     vendor-performance KPI behind every procurement review.
@@ -3101,7 +3064,7 @@ def supplier_otif_scorecard(
         .groupBy("l_suppkey")
         .agg(
             F.count(F.lit(1)).alias("n_lineitems"),
-            F.sum(F.when(lag_days <= sla_days, 1).otherwise(0))
+            F.sum(F.when(lag_days <= 60, 1).otherwise(0))
             .cast("long")
             .alias("n_on_time"),
             F.round(F.avg(lag_days), 4).alias("avg_ship_days"),
@@ -4263,12 +4226,12 @@ def orders_same_day_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def part_prefix_autocomplete(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+def part_prefix_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search-as-you-type PREFIX INDEX build: for every 2-6 character
-    prefix of every part-name word, the top-k parts by lineitem revenue —
+    prefix of every part-name word, the top-3 parts by lineitem revenue —
     the offline artifact an autocomplete service serves from.  Prefix
     explosion is bounded (<= 5 prefixes per word), revenue is the exact
-    integer-cent aggregate joined once, and per-prefix top-k is a
+    integer-cent aggregate joined once, and per-prefix top-3 is a
     rank-window over the prefix-keyed frame (WindowGroupLimit pushes the
     cut before the shuffle materializes the full lists).
 
@@ -4299,7 +4262,7 @@ def part_prefix_autocomplete(spark: SparkSession, sf_dir: str, k: int = 3) -> Da
     )
     return (
         scored.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 3)
         .select(
             "prefix",
             F.col("rank").cast("long").alias("rank"),
@@ -4870,12 +4833,10 @@ def profile_merkle_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_temperature_mix(
-    spark: SparkSession, sf_dir: str, alpha: float = 0.3
-) -> DataFrame:
+def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source sampling (the multilingual pretraining
     recipe, mC4/XLM-R style): sampling probability q_i ∝ p_i^alpha where
-    p_i is a source's natural token share — alpha < 1 flattens the mix,
+    p_i is a source's natural token share — alpha = 0.3 < 1 flattens the mix,
     upweighting tail sources without drowning the head.  Complements
     sample_token_budget_mix (which CUTS to a budget) by producing the
     closed-form DISTRIBUTION a weighted sampler would draw from.
@@ -4902,7 +4863,7 @@ def sample_temperature_mix(
         .withColumn("p", F.col("tokens") / F.col("tot"))
         .withColumn(
             "q_raw",
-            F.round(F.pow(F.col("p"), F.lit(alpha)), 9).cast(
+            F.round(F.pow(F.col("p"), F.lit(0.3)), 9).cast(
                 "decimal(18,9)"
             ),
         )
@@ -4985,9 +4946,7 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_session_window_batch(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
+def events_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BUILT-IN session_window aggregate in batch mode — Spark's
     native merging-interval operator (each event opens [ts, ts+gap);
     overlapping intervals merge), complementing the hand-rolled
@@ -5001,6 +4960,7 @@ def events_session_window_batch(
     interval merging — the merge is sort-based within each key group,
     never quadratic.  Output: one row per session with its span and
     exact integer-cent value total."""
+    gap_minutes = 30
     events = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("long")
     return (
@@ -5147,9 +5107,7 @@ def events_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Grid-binned spatial join (round 6)
 # ---------------------------------------------------------------------------
 
-def join_spatial_grid(
-    spark: SparkSession, sf_dir: str, radius: int = 25_000
-) -> DataFrame:
+def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial radius join via grid binning — the 2-D extension of
     join_range_binned and the standard distributed-geospatial technique
     (Sedona/GeoMesa grid partitioning): points land in radius-sized square
@@ -5169,6 +5127,7 @@ def join_spatial_grid(
     Output: (s_suppkey, n_within, min_dist2) for suppliers with >= 1
     customer inside the radius.
     """
+    radius = 25_000
     r2 = radius * radius
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -5538,9 +5497,7 @@ def events_hourly_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Poisson-bootstrap confidence intervals (round 7)
 # ---------------------------------------------------------------------------
 
-def events_bootstrap_ci(
-    spark: SparkSession, sf_dir: str, n_reps: int = 32
-) -> DataFrame:
+def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap confidence interval for the mean event value per
     event type — THE distributed bootstrap (each replicate reweights
     every row by an independent Poisson(1) draw, so resampling needs no
@@ -5560,6 +5517,7 @@ def events_bootstrap_ci(
     Scale shape: explode x32 happens AT THE SCAN (map-side), the only
     shuffle is the (event_type, rep) groupBy — map-side combined to
     5 x 32 partial rows; the order-statistic window runs on 160 rows."""
+    n_reps = 32
     ev = load(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
@@ -5615,12 +5573,10 @@ def events_bootstrap_ci(
 # Deterministic negative sampling for contrastive pairs (round 7)
 # ---------------------------------------------------------------------------
 
-def sample_negative_pairs(
-    spark: SparkSession, sf_dir: str, k: int = 2
-) -> DataFrame:
+def sample_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Negative sampling for contrastive training pairs — the step that
     turns an interaction log into (anchor, positive, negative) triples:
-    for every observed (customer, part) purchase pair, generate k
+    for every observed (customer, part) purchase pair, generate 2
     deterministic candidate parts by hash, then ANTI-JOIN the positives
     so no accidental positive survives (rejection step).  The same
     recipe samples hard negatives for embedding training at corpus
@@ -5633,7 +5589,7 @@ def sample_negative_pairs(
     duplicate interactions emit duplicate candidates that the single
     (custkey, part) aggregate collapses anyway.  Positives and candidates
     flow as ONE tagged stream from a single generate (j = -1 emits the
-    positive, j in [0, k) the candidates — the interaction join scans
+    positive, j in [0, 2) the candidates — the interaction join scans
     once, not once per stream), and the whole rejection logic is
     TWO stacked aggregations on ONE custkey hash partitioning:
     groupBy(custkey, part) folds duplicates and marks each cell
@@ -5664,13 +5620,13 @@ def sample_negative_pairs(
         F.col("l_partkey").alias("partkey"),
     )
     # one generate per interaction row covers BOTH streams: j = -1 is the
-    # positive itself, j in [0, k) the hash candidates — the join output
+    # positive itself, j in [0, 2) the hash candidates — the join output
     # scans once instead of once per stream
     tagged = (
         raw.crossJoin(F.broadcast(n_parts))
         .select(
             "custkey",
-            F.explode(F.sequence(F.lit(-1), F.lit(k - 1))).alias("j"),
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("j"),
             "partkey",
             "np",
         )
@@ -5992,10 +5948,8 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Neyman-optimal stratified allocation (round 7)
 # ---------------------------------------------------------------------------
 
-def sample_neyman_allocation(
-    spark: SparkSession, sf_dir: str, budget: int = 1000
-) -> DataFrame:
-    """Neyman-optimal allocation of a sampling budget across strata —
+def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Neyman-optimal allocation of a 1000-row sampling budget across strata —
     the survey-sampling answer to "how many rows should each stratum
     contribute": n_h ∝ N_h·S_h, so high-variance strata get
     proportionally more than their row share (versus the proportional
@@ -6044,7 +5998,7 @@ def sample_neyman_allocation(
         F.round(F.col("sv").cast("double") / F.col("n_h"), 6).alias("mean_v"),
         "s_h",
         F.floor(
-            F.lit(float(budget))
+            F.lit(1000.0)
             * F.col("nhsh").cast("double")
             / F.col("sum_nhsh").cast("double")
         ).cast("long").alias("alloc"),
@@ -6781,13 +6735,11 @@ def orders_simpson_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def profile_l_diversity(
-    spark: SparkSession, sf_dir: str, l: int = 3
-) -> DataFrame:
+def profile_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L-diversity audit — the companion to profile_k_anonymity: a
     k-anonymous class is still unsafe if everyone in it shares the same
     SENSITIVE value (homogeneity attack), so each (nation, account-band)
-    quasi-identifier class must contain >= l distinct market segments.
+    quasi-identifier class must contain >= l = 3 distinct market segments.
     Also reports entropy l-diversity's integer core: the modal-segment
     count, since a class dominated by one segment leaks probabilistically
     even when distinct-l passes.
@@ -6816,7 +6768,7 @@ def profile_l_diversity(
             "class_size",
             "l_distinct",
             "modal_count",
-            (F.col("l_distinct") < l).alias("violates_l"),
+            (F.col("l_distinct") < 3).alias("violates_l"),
         )
     )
 
@@ -7462,7 +7414,7 @@ def geo_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_ipf_raking(spark: SparkSession, sf_dir: str, rounds: int = 3) -> DataFrame:
+def sample_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative proportional fitting (raking) — the survey-statistics /
     training-mix reweighting primitive: scale the (event_type x day-part)
     count table so BOTH margins match target shares (uniform here, the
@@ -7495,7 +7447,7 @@ def sample_ipf_raking(spark: SparkSession, sf_dir: str, rounds: int = 3) -> Data
     )
     # uniform targets: 1/5 per type row, 1/4 per day-part column
     row_t, col_t = 0.2, 0.25
-    for _ in range(rounds):
+    for _ in range(3):
         rm = w.groupBy("event_type").agg(F.sum("w").alias("row_sum"))
         w = (
             w.join(F.broadcast(rm), "event_type")
@@ -7679,9 +7631,7 @@ def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def orders_cohort_retention_triangle(
-    spark: SparkSession, sf_dir: str, horizon_months: int = 12
-) -> DataFrame:
+def orders_cohort_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic cohort-retention triangle: customers grouped by FIRST
     order month; cell (cohort, m) = the fraction of the cohort that
     ordered again m months later — the growth-analytics readout every
@@ -7712,7 +7662,7 @@ def orders_cohort_retention_triangle(
             .cast("long")
             .alias("months_since"),
         )
-        .where(F.col("months_since") <= horizon_months)
+        .where(F.col("months_since") <= 12)
         .distinct()
         .groupBy("cohort_month", "months_since")
         .agg(F.count(F.lit(1)).cast("long").alias("n_active"))
@@ -8317,12 +8267,10 @@ def events_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (X236-X237)
 # ---------------------------------------------------------------------------
 
-def orders_market_basket_lift(
-    spark: SparkSession, sf_dir: str, min_support: int = 5
-) -> DataFrame:
+def orders_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules over order baskets (brand level):
     support / confidence / lift for every brand pair bought together in
-    at least ``min_support`` orders — the one-pass co-occurrence core of
+    at least 5 orders — the one-pass co-occurrence core of
     apriori when the itemset depth is 2 (which is what retail dashboards
     actually ship).
 
@@ -8376,7 +8324,7 @@ def orders_market_basket_lift(
         .where(F.col("brand_a") < F.col("brand_b"))
         .groupBy("brand_a", "brand_b")
         .agg(F.count(F.lit(1)).cast("long").alias("pair_n"))
-        .where(F.col("pair_n") >= min_support)
+        .where(F.col("pair_n") >= 5)
     )
     sa = supp.select(F.col("brand").alias("brand_a"), F.col("supp").alias("supp_a"))
     sb = supp.select(F.col("brand").alias("brand_b"), F.col("supp").alias("supp_b"))
@@ -8733,10 +8681,10 @@ def events_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_sax_motifs(spark: SparkSession, sf_dir: str, motif_len: int = 3) -> DataFrame:
+def events_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SAX symbolization + motif mining of the hourly volume series:
     each hour's count maps to a quartile symbol a-d, consecutive
-    symbols form ``motif_len``-grams, and the most frequent motifs are
+    symbols form ``motif_len`` = 3-grams, and the most frequent motifs are
     the series' recurring shapes (Lin et al.'s SAX, the standard
     discretization for time-series pattern mining at scale).
 
@@ -8751,6 +8699,7 @@ def events_sax_motifs(spark: SparkSession, sf_dir: str, motif_len: int = 3) -> D
     table, like events_stl_decompose.
 
     Output: top 10 (motif, n_occurrences) by (count desc, motif)."""
+    motif_len = 3
     hourly = (
         load(spark, sf_dir, "events")
         .groupBy(F.date_trunc("hour", F.col("ts")).alias("h"))

@@ -42,18 +42,16 @@ def _cosine_vs_query(vec: Column) -> Column:
     return dot(vec, F.col("q_vec")) / (norm(vec) * F.col("q_norm"))
 
 
-def similarity_topk_bruteforce(
-    spark: SparkSession, sf_dir: str, k: int = 10, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
-    """Exact cosine top-k for one query vector.
+def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-10 for one query vector.
 
     The 1-row query side broadcasts; the candidate scan never shuffles and
     Spark plans TakeOrderedAndProject for the limit (per-task heaps, no
     global sort).  This plan is unchanged at 10^9 candidates."""
     emb = load(spark, sf_dir, "embeddings")
-    q = _query_side(emb, query_vec_id)
+    q = _query_side(emb, QUERY_VEC_ID)
     scored = (
-        fan_out(emb.where(F.col("vec_id") != query_vec_id))
+        fan_out(emb.where(F.col("vec_id") != QUERY_VEC_ID))
         .join(F.broadcast(q))
         .select(
             "vec_id",
@@ -61,7 +59,7 @@ def similarity_topk_bruteforce(
             F.round(_cosine_vs_query(F.col("embedding")), 6).alias("cosine"),
         )
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(10)
 
 
 def _plane_weight(plane: int, dim_index: Column) -> Column:
@@ -102,9 +100,7 @@ def signature_bits(vec: Column, num_planes: int = NUM_PLANES) -> Column:
     return F.concat(*bits)
 
 
-def similarity_ann_lsh(
-    spark: SparkSession, sf_dir: str, k: int = 5, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
+def similarity_ann_lsh(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     """Approximate NN: candidates = vectors in the query's sign-LSH bucket,
     ranked by exact cosine, top-k.  At 100 TB the bucket key is also the
     at-rest partition key, so a probe reads one partition, not the corpus.
@@ -114,13 +110,13 @@ def similarity_ann_lsh(
         "bucket", signature_bits(F.col("embedding"))
     )
     q = (
-        emb.where(F.col("vec_id") == query_vec_id)
+        emb.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("vec_id").alias("q_id"),
                 F.col("embedding").alias("q_vec"),
                 norm(F.col("embedding")).alias("q_norm"),
                 F.col("bucket").alias("q_bucket"))
     )
-    candidates = emb.where(F.col("vec_id") != query_vec_id).join(
+    candidates = emb.where(F.col("vec_id") != QUERY_VEC_ID).join(
         F.broadcast(q), F.col("bucket") == F.col("q_bucket")
     )
     scored = candidates.select(
@@ -131,12 +127,9 @@ def similarity_ann_lsh(
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
-def similarity_ann_lsh_multiprobe(
-    spark: SparkSession, sf_dir: str, k: int = 5,
-    query_vec_id: int = QUERY_VEC_ID, max_hamming: int = 1,
-) -> DataFrame:
+def similarity_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-LSH ANN: candidates come from the query's bucket
-    AND every bucket within hamming distance ``max_hamming`` of it — the
+    AND every bucket within hamming distance 1 of it — the
     standard recall knob for sign-LSH (a near neighbor that lands just
     across one hyperplane is recovered from the adjacent bucket).  Probing
     b+1 of the 2^b buckets reads ~(1+b)/2^b of the corpus instead of
@@ -146,7 +139,7 @@ def similarity_ann_lsh_multiprobe(
         "bucket", signature_bits(F.col("embedding"))
     )
     q = (
-        emb.where(F.col("vec_id") == query_vec_id)
+        emb.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").alias("q_vec"),
                 norm(F.col("embedding")).alias("q_norm"),
                 F.col("bucket").alias("q_bucket"))
@@ -158,15 +151,15 @@ def similarity_ann_lsh_multiprobe(
         ).otherwise(0)
         for i in range(1, NUM_PLANES + 1)
     )
-    candidates = emb.where(F.col("vec_id") != query_vec_id).join(
-        F.broadcast(q), hamming <= max_hamming
+    candidates = emb.where(F.col("vec_id") != QUERY_VEC_ID).join(
+        F.broadcast(q), hamming <= 1
     )
     scored = candidates.select(
         "vec_id",
         "bucket",
         F.round(_cosine_vs_query(F.col("embedding")), 6).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(5)
 
 
 def write_ann_bucket_layout(emb: DataFrame, path: str) -> None:
@@ -217,25 +210,23 @@ def probe_ann_bucket_layout(
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
-def similarity_ann_batch(
-    spark: SparkSession, sf_dir: str, k: int = 3, n_queries: int = 8
-) -> DataFrame:
-    """BATCHED ANN: top-k neighbors for a whole batch of query vectors in
+def similarity_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BATCHED ANN: top-3 neighbors for a whole batch of query vectors in
     ONE bucketed pass — the production serving shape (queries arrive in
     batches; running the single-query plan per query re-scans the corpus
     batch-size times).
 
-    Plan: the query batch (vec_id < n_queries) broadcasts with its
+    Plan: the query batch (vec_id < 8) broadcasts with its
     buckets; candidates equi-join on bucket equality — every query only
     meets its own bucket's candidates, so the scored pair count is
     sum-over-queries of bucket sizes, never |batch| x |corpus|.  One
-    window partitioned by query keeps each query's top-k.  At rest the
+    window partitioned by query keeps each query's top-3.  At rest the
     same probe partition-prunes per bucket (write_ann_bucket_layout)."""
     emb = fan_out(load(spark, sf_dir, "embeddings")).withColumn(
         "bucket", signature_bits(F.col("embedding"))
     )
     q = (
-        emb.where(F.col("vec_id") < n_queries)
+        emb.where(F.col("vec_id") < 8)
         .select(
             F.col("vec_id").alias("q_id"),
             F.col("embedding").alias("q_vec"),
@@ -256,7 +247,7 @@ def similarity_ann_batch(
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+        .where(F.col("rnk") <= 3)
         .select("q_id", "vec_id", "cosine", "rnk")
     )
 
@@ -631,11 +622,9 @@ def ivf_cluster_stats(emb: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def similarity_ann_ivf(
-    spark: SparkSession, sf_dir: str, k: int = 5, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
+def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via IVF probe: assign all vectors to centroids, find
-    the query's centroid, rank only that cluster by exact cosine, top-k.
+    the query's centroid, rank only that cluster by exact cosine, top-5.
 
     nprobe=1 (one cluster) — the recall/latency knob at scale is probing
     the p nearest centroids instead; the plan shape does not change."""
@@ -643,14 +632,14 @@ def similarity_ann_ivf(
     assign = ivf_assignments(emb)
     with_cluster = emb.join(assign, "vec_id")
     q = (
-        with_cluster.where(F.col("vec_id") == query_vec_id)
+        with_cluster.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(
             F.col("embedding").alias("q_vec"),
             norm(F.col("embedding")).alias("q_norm"),
             F.col("centroid_id").alias("q_centroid"),
         )
     )
-    candidates = with_cluster.where(F.col("vec_id") != query_vec_id).join(
+    candidates = with_cluster.where(F.col("vec_id") != QUERY_VEC_ID).join(
         F.broadcast(q), F.col("centroid_id") == F.col("q_centroid")
     )
     scored = candidates.select(
@@ -658,7 +647,7 @@ def similarity_ann_ivf(
         F.col("centroid_id").cast("long").alias("centroid_id"),
         F.round(_cosine_vs_query(F.col("embedding")), 6).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(5)
 
 
 # ---------------------------------------------------------------------------
@@ -758,10 +747,8 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, sub_dim: int, m: int = PQ_M) 
     )
 
 
-def similarity_pq_adc(
-    spark: SparkSession, sf_dir: str, k: int = 10, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
-    """PQ-compressed ANN: top-k by asymmetric distance computation.
+def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ-compressed ANN: top-10 by asymmetric distance computation.
 
     The corpus is PQ-encoded (PQ_M nibbles per vector — a 512x compression
     of a 64-dim float vector); the query stays exact.  ADC precomputes the
@@ -770,13 +757,13 @@ def similarity_pq_adc(
     vector is touched at query time, which is why PQ is the at-rest format
     for billion-scale ANN.  Scale: one narrow encode pass + one broadcast
     lookup join + one groupBy(vec_id) over m rows per vector; the final
-    top-k is TakeOrderedAndProject.
+    top-10 is TakeOrderedAndProject.
     """
     emb = load(spark, sf_dir, "embeddings")
     sub_dim = max(1, infer_dim(emb, "embedding") // PQ_M)
     cb = pq_codebook(emb, sub_dim)
     enc = pq_encode(fan_out(emb), cb, sub_dim)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
+    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("s"),
         F.col("embedding").alias("q_vec"),
     ).select(
@@ -794,7 +781,7 @@ def similarity_pq_adc(
     )
     nib = F.lower(F.conv(F.col("code_id").cast("string"), 10, 16))
     return (
-        enc.where(F.col("vec_id") != query_vec_id)
+        enc.where(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(qtab), ["s", "code_id"])
         .withColumn("nib", nib)
         .groupBy("vec_id")
@@ -809,7 +796,7 @@ def similarity_pq_adc(
             F.round(F.sum("qd"), 6).alias("adc_dist"),
         )
         .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -820,11 +807,9 @@ def similarity_pq_adc(
 JL_OUT_DIM = 16
 
 
-def embedding_random_projection(
-    spark: SparkSession, sf_dir: str, out_dim: int = JL_OUT_DIM
-) -> DataFrame:
+def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss sketch: project 64-dim embeddings to
-    ``out_dim`` with a deterministic Rademacher (+-1/sqrt(k)) matrix derived
+    ``JL_OUT_DIM`` = 16 with a deterministic Rademacher (+-1/sqrt(k)) matrix derived
     from md5 — 4x smaller vectors whose pairwise distances are preserved in
     expectation, the standard pre-ANN compression when PQ's lossy codes are
     too coarse.
@@ -837,7 +822,7 @@ def embedding_random_projection(
     emb = load(spark, sf_dir, "embeddings")
     projected = fan_out(emb).select(
         "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(out_dim - 1))).alias("out_dim"),
+        F.explode(F.sequence(F.lit(0), F.lit(JL_OUT_DIM - 1))).alias("out_dim"),
         F.col("embedding").alias("e"),
     )
 
@@ -872,9 +857,7 @@ def _jl_weight_dyn(j_col: Column, dim_index: Column) -> Column:
     return F.when(sign_bit, F.lit(scale)).otherwise(F.lit(-scale))
 
 
-def similarity_ivfpq_adc(
-    spark: SparkSession, sf_dir: str, k: int = 10, query_vec_id: int = QUERY_VEC_ID
-) -> DataFrame:
+def similarity_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ: the billion-scale ANN composition — an IVF coarse quantizer
     narrows the search to one centroid's inverted list, and PQ codes of the
     RESIDUALS (vector minus its centroid) replace the float vectors inside
@@ -917,7 +900,7 @@ def similarity_ivfpq_adc(
     cb = pq_codebook(res, sub_dim)
     enc = pq_encode(fan_out(res), cb, sub_dim)
 
-    q_res = res.where(F.col("vec_id") == query_vec_id).select(
+    q_res = res.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("centroid_id").alias("q_centroid"),
         F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("s"),
         F.col("embedding").alias("q_re"),
@@ -933,7 +916,7 @@ def similarity_ivfpq_adc(
     )
     nib = F.lower(F.conv(F.col("code_id").cast("string"), 10, 16))
     return (
-        enc.where(F.col("vec_id") != query_vec_id)
+        enc.where(F.col("vec_id") != QUERY_VEC_ID)
         .join(res.select("vec_id", "centroid_id").distinct(), "vec_id")
         .join(
             F.broadcast(qtab),
@@ -959,17 +942,11 @@ def similarity_ivfpq_adc(
             "pq_code", "adc_dist",
         )
         .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
-def similarity_recall_at_k(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    n_queries: int = 20,
-    num_planes: int = 3,
-) -> DataFrame:
+def similarity_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the sign-LSH ANN against exact brute-force ground truth
     over a batch of query vectors — the evaluation harness every ANN
     deployment runs before trusting an index (FAISS/ScaNN benchmark shape).
@@ -996,12 +973,13 @@ def similarity_recall_at_k(
     everything, ANN over the in-bucket subset (a cheap flag, not a second
     scan).  The recall join and rollup run on Q*k rows.  Exactly one
     corpus-wide shuffle (the window's q_id hash), and q_id has
-    ``n_queries`` distinct values, so AQE coalesces it to the query count.
+    20 distinct values, so AQE coalesces it to the query count.
     """
+    k = 10
     emb = fan_out(load(spark, sf_dir, "embeddings")).withColumn(
-        "bucket", signature_bits(F.col("embedding"), num_planes)
+        "bucket", signature_bits(F.col("embedding"), 3)
     )
-    q = emb.where(F.col("vec_id") < n_queries).select(
+    q = emb.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_vec"),
         norm(F.col("embedding")).alias("q_norm"),
@@ -1247,13 +1225,7 @@ def similarity_sq8_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Matryoshka dimension-truncation quality sweep (round 6)
 # ---------------------------------------------------------------------------
 
-def similarity_matryoshka_error(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    budgets: tuple[int, ...] = (8, 16, 32, 64),
-    query_vec_id: int = QUERY_VEC_ID,
-) -> DataFrame:
+def similarity_matryoshka_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka / dimension-truncation retrieval-quality sweep: for
     each prefix-dimension budget d, how much of the FULL-vector top-k
     does cosine over only the first d dimensions recover, and how far do
@@ -1269,19 +1241,20 @@ def similarity_matryoshka_error(
     the summed rank displacement of the true top-k — are pure BIGINT, so
     the hash gate carries no float aggregation at all.
 
-    Scale shape: ONE candidate scan fanned out |budgets| times via an
+    Scale shape: ONE candidate scan fanned out 4 times (budgets 8/16/32/64) via an
     exploded literal array (a projection, not a join); each budget's two
     rankings are windows over the budget partition.  At 100 TB the
     windows become per-budget top-k TakeOrdered passes; the certification
-    output stays |budgets| rows regardless of corpus size."""
+    output stays 4 rows regardless of corpus size."""
+    k = 10
     emb = load(spark, sf_dir, "embeddings")
-    q = _query_side(emb, query_vec_id)
+    q = _query_side(emb, QUERY_VEC_ID)
     scored = (
-        fan_out(emb.where(F.col("vec_id") != query_vec_id))
+        fan_out(emb.where(F.col("vec_id") != QUERY_VEC_ID))
         .join(F.broadcast(q))
         .select(
             "vec_id",
-            F.explode(F.array([F.lit(d) for d in budgets])).alias("budget"),
+            F.explode(F.array([F.lit(d) for d in (8, 16, 32, 64)])).alias("budget"),
             F.col("embedding").alias("e"),
             F.col("q_vec"),
             F.col("q_norm"),
@@ -1336,12 +1309,7 @@ def similarity_matryoshka_error(
 # MIPS -> cosine norm-augmentation certification (round 6)
 # ---------------------------------------------------------------------------
 
-def similarity_mips_transform(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    query_vec_id: int = QUERY_VEC_ID,
-) -> DataFrame:
+def similarity_mips_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum-inner-product search reduced to cosine search via the
     norm-augmentation transform (Bachrach et al. / Shrivastava-Li): each
     candidate x gains one dimension sqrt(M² − ‖x‖²) where M = max ‖x‖,
@@ -1361,19 +1329,19 @@ def similarity_mips_transform(
     Scale shape: one candidate scan + a 1-row broadcast for M and a
     1-row broadcast for the query; the dot ranking is a TakeOrdered
     top-k and the cosine ranking a two-phase global rank (r11 — neither
-    is a single-task window); output is k rows."""
+    is a single-task window); output is 10 rows."""
     emb = load(spark, sf_dir, "embeddings")
-    q = _query_side(emb, query_vec_id)
+    q = _query_side(emb, QUERY_VEC_ID)
     # MAX of the SQUARED norms (not max(norm)**2): the sqrt round-trip
     # would leave m**2 - <x,x> a few ulps NEGATIVE for the argmax vector
     # itself; with m2 = max(<x,x>) the residual is exactly 0.0 there.
     m = (
-        emb.where(F.col("vec_id") != query_vec_id)
+        emb.where(F.col("vec_id") != QUERY_VEC_ID)
         .select(dot(F.col("embedding"), F.col("embedding")).alias("nx2"))
         .agg(F.max("nx2").alias("m2"))
     )
     scored = (
-        fan_out(emb.where(F.col("vec_id") != query_vec_id))
+        fan_out(emb.where(F.col("vec_id") != QUERY_VEC_ID))
         .join(F.broadcast(q))
         .join(F.broadcast(m))
         .select(
@@ -1406,8 +1374,8 @@ def similarity_mips_transform(
     # (a top-k-by-dot row can rank anywhere by cosine), so it runs through
     # the certified two_phase_global_rank (~2k floor(cos*1e3) buckets —
     # cos_aug is 6-dp rounded in [-1, 1] — broadcast offsets, partitioned
-    # in-bucket row_number).  rank_dot is only ever CONSUMED at <= k, so
-    # the top-k by dot is a TakeOrderedAndProject limit with the k-row
+    # in-bucket row_number).  rank_dot is only ever CONSUMED at <= 10, so
+    # the top-10 by dot is a TakeOrderedAndProject limit with the 10-row
     # rank window after it — bit-identical ranks, zero global sorts.
     from simple_land_registry_data_ingestion_spark.operators.relational import two_phase_global_rank
 
@@ -1421,7 +1389,7 @@ def similarity_mips_transform(
     w_dot = Window.orderBy(F.col("dot_score").desc(), F.col("vec_id"))
     ranked = (
         ranked_cos.orderBy(F.col("dot_score").desc(), F.col("vec_id"))
-        .limit(k)
+        .limit(10)
         .withColumn("rank_dot", F.row_number().over(w_dot).cast("long"))
     )
     return (
@@ -1528,9 +1496,7 @@ def sample_kcenter_coreset(
     return out
 
 
-def similarity_power_iteration(
-    spark: SparkSession, sf_dir: str, iterations: int = 2
-) -> DataFrame:
+def similarity_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal direction of the embedding matrix by
     distributed POWER ITERATION — the first component a pipeline
     inspects for anisotropy ("all my embeddings point one way") and the
@@ -1569,7 +1535,7 @@ def similarity_power_iteration(
         F.lit(0.125).cast("decimal(28,12)").alias("vi"),
     )
     m = None
-    for _ in range(iterations):
+    for _ in range(2):
         s = (
             x.join(F.broadcast(v), "i")
             .groupBy("vec_id")

@@ -162,12 +162,10 @@ def agg_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_count_min_sketch(
-    spark: SparkSession, sf_dir: str, depth: int = 4, width: int = 64
-) -> DataFrame:
+def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch built ENTIRELY from relational ops, certified
     against exact counts (Cormode & Muthukrishnan 2005): ``depth``
-    independent hash rows of ``width`` counters each; a key's estimate is
+    = 4 independent hash rows of 64 counters each; a key's estimate is
     the MIN over rows of its cell total.  The classic guarantees — never
     underestimates, overestimate bounded by colliding mass — fall out of
     the construction and the driver's hash gate certifies them row by row
@@ -176,7 +174,7 @@ def agg_count_min_sketch(
 
     Plan at 100 TB: the sketch IS the aggregation pattern — one exact
     groupBy on the key would shuffle every distinct key, while the CMS
-    cells are depth*width counters TOTAL, built with a map-side-combined
+    cells are depth*64 counters TOTAL, built with a map-side-combined
     groupBy on (row, bucket): constant-size shuffle regardless of key
     cardinality.  Here the exact counts are also computed (that is the
     certification), so the expensive path runs once to prove the cheap
@@ -185,14 +183,15 @@ def agg_count_min_sketch(
 
     Output: one row per distinct user_id with exact count, CMS estimate,
     and the overestimate (>= 0 by construction)."""
+    depth = 4
     events = load(spark, sf_dir, "events")
     exact = events.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_exact")
     )
 
     def bucket(row: int):
-        # first 8 md5 hex chars -> 32-bit int -> % width; portable to the
-        # oracle's ('0x' || substring(md5(...), 1, 8))::BIGINT % width
+        # first 8 md5 hex chars -> 32-bit int -> % 64; portable to the
+        # oracle's ('0x' || substring(md5(...), 1, 8))::BIGINT % 64
         return (
             F.conv(
                 F.substring(
@@ -203,7 +202,7 @@ def agg_count_min_sketch(
                 16,
                 10,
             ).cast("long")
-            % width
+            % 64
         )
 
     # keyed is distinct-key-sized (tiny next to the corpus) and feeds five
@@ -228,9 +227,7 @@ def agg_count_min_sketch(
     )
 
 
-def agg_bloom_filter_fpr(
-    spark: SparkSession, sf_dir: str, m: int = 4096, k: int = 3
-) -> DataFrame:
+def agg_bloom_filter_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter certification built ENTIRELY from relational ops
     (Bloom 1970): insert every BUYER (distinct o_custkey) into an m-bit
     filter via k md5-derived bit positions, probe every NON-buyer
@@ -252,6 +249,8 @@ def agg_bloom_filter_fpr(
     <= 3x theory as a BOOLEAN so libm pow ulps cannot flip the hash.
     Output: one row (n_keys, n_bits_set, n_probes, n_false_positives,
     fpr_measured, within_bound)."""
+    m = 4096
+    k = 3
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     # keys = 1995 buyers; probes = the rest (on this synthetic corpus every
@@ -593,7 +592,7 @@ def agg_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def agg_kmv_distinct(spark: SparkSession, sf_dir: str, k: int = 256) -> DataFrame:
+def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum values) distinct-count sketch per event type — the
     order-statistics alternative to HLL: hash every key into [0,1), keep
     the k smallest, estimate D ~ (k-1)/h_(k) (Bar-Yossef et al.).  KMV's
@@ -610,6 +609,7 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str, k: int = 256) -> DataFram
     Scale: one (type, user) distinct then a bounded top-k window —
     at production scale the distinct collapses into per-partition
     k-min-heaps (aggregate state k hashes), which is the point."""
+    k = 256
     ev = load(spark, sf_dir, "events").select("event_type", "user_id").distinct()
     h = (
         F.conv(
@@ -655,7 +655,7 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str, k: int = 256) -> DataFram
     )
 
 
-def agg_kmv_setops(spark: SparkSession, sf_dir: str, k: int = 64) -> DataFrame:
+def agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV sketch SET OPERATIONS — the capability that justifies KMV over
     HLL (agg_kmv_distinct's docstring claim, now certified): union and
     intersection cardinalities of the purchase-user and click-user sets
@@ -674,6 +674,7 @@ def agg_kmv_setops(spark: SparkSession, sf_dir: str, k: int = 64) -> DataFrame:
 
     Scale: one (user, flags) aggregate + one bounded top-k; exact sides
     are keyed distincts that exist only to certify the estimator."""
+    k = 64
     ev = load(spark, sf_dir, "events").where(
         F.col("event_type").isin("purchase", "click")
     )

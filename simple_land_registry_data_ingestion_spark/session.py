@@ -5,7 +5,7 @@ main.py:298-372: one Python thread, 50k-row pandas chunks) with a configured
 Spark session.  The chunk loop disappears into partitions; partial/final
 aggregation, spill, and pipelining are engine-provided (SURVEY.md section 4).
 
-Scale defaults (local[32] test box, but written for a 1000-executor cluster):
+Scale defaults (local[<cores>] test box, but written for a 1000-executor cluster):
  - AQE on: runtime coalescing of shuffle partitions, skew-join splitting.
  - Arrow on: vectorized pandas interchange for the few Pandas-UDF operators.
  - shuffle.partitions sized by env (cluster deployments override per job).
@@ -20,7 +20,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: ``SPARK_GRAFT_CPUS``, else the cores this process may run on.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 #: Configuration applied to every session this package builds.  These are all
 #: safe to set on a shared cluster session as well (idempotent, no side
@@ -55,7 +56,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the package's tuning applied.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster is
+    ``master`` defaults to ``local[DEFAULT_CPUS]`` when no cluster is
     configured; on a real cluster, leave it unset and let spark-submit decide.
     ``extra_conf`` lets callers add STATIC confs that must be set before the
     JVM starts (e.g. ``spark.driver.memory`` for an oversized local run);
@@ -84,7 +85,7 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     are runtime-mutable are applied (static ones like driver memory are
     left alone).  ``spark.sql.shuffle.partitions`` IS runtime-mutable and
     matters most here (r11): a stock session defaults to 200 shuffle
-    partitions, ~6x more tasks than the 32-core box needs — every keyed
+    partitions, ~6x more tasks than a 32-core box needs — every keyed
     exchange in a driver-side run paid that scheduling overhead before
     AQE coalescing clawed part of it back.
 
@@ -96,18 +97,9 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     correctly; ``SPARK_GRAFT_CPUS`` remains the explicit escape hatch
     and wins when set.
     """
-    for key in (
-        "spark.sql.session.timeZone",
-        "spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.execution.arrow.pyspark.enabled",
-        "spark.sql.files.maxPartitionBytes",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-    ):
+    for key, value in TUNING.items():
         try:
-            spark.conf.set(key, TUNING.get(key, "true"))
+            spark.conf.set(key, value)
         except Exception:  # pragma: no cover - static conf on some builds
             pass
     try:

@@ -445,7 +445,6 @@ def stream_stream_left_outer_interval_join(
     sf_dir: str,
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """LEFT-OUTER stream-stream interval join — the production attribution
     shape: EVERY purchase emits, either matched to the same user's clicks
@@ -464,6 +463,7 @@ def stream_stream_left_outer_interval_join(
     interval the FINAL watermark passed — purchases younger than the
     final watermark are withheld and their state discarded.  The DuckDB
     twin applies the same final-watermark filter to the null side."""
+    watermark = "1 hour"
     clicks = (
         events_stream(spark, sf_dir, glob, max_files_per_trigger)
         .where(F.col("event_type") == "click")
@@ -613,7 +613,6 @@ def stream_inactivity_sessions(
     sf_dir: str,
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Closed user sessions via the EventTimeTimeout stateful operator.
     Only sessions the watermark has proven over (last event + gap passed)
@@ -621,7 +620,7 @@ def stream_inactivity_sessions(
     — the same withholding discipline as append-mode windows."""
     sessions = (
         events_stream(spark, sf_dir, glob, max_files_per_trigger)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "10 minutes")
         .select("user_id", "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -1085,11 +1084,7 @@ def stream_upsert_latest(
 
 
 def stream_full_outer_interval_join(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-    watermark: str = "1 hour",
+    spark: SparkSession, sf_dir: str, glob: str = "events.parquet",
 ) -> DataFrame:
     """FULL-OUTER stream-stream interval join — the audit-complete
     attribution shape: every purchase emits (matched or null-click once
@@ -1110,8 +1105,9 @@ def stream_full_outer_interval_join(
     tests/test_streaming.py::test_full_outer_interval_join_watermark_boundary.
     The DuckDB twin applies both final-watermark filters explicitly
     with the same inclusivity."""
+    watermark = "1 hour"
     clicks = (
-        events_stream(spark, sf_dir, glob, max_files_per_trigger)
+        events_stream(spark, sf_dir, glob)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -1121,7 +1117,7 @@ def stream_full_outer_interval_join(
         .withWatermark("c_ts", watermark)
     )
     purchases = (
-        events_stream(spark, sf_dir, glob, max_files_per_trigger)
+        events_stream(spark, sf_dir, glob)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -1160,12 +1156,7 @@ def stream_full_outer_interval_join(
     )
 
 
-def stream_state_inspect(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 STATE STORE READER certification — operational
     observability for stateful streaming: after a per-user streaming
     count drains (availableNow), read the aggregation's state store
@@ -1188,7 +1179,7 @@ def stream_state_inspect(
     ckpt = tempfile.mkdtemp(prefix="state_inspect_ckpt_")
     try:
         counts = (
-            events_stream(spark, sf_dir, glob, max_files_per_trigger)
+            events_stream(spark, sf_dir)
             .groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )

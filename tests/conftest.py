@@ -14,6 +14,7 @@ from simple_land_registry_data_ingestion_spark.session import get_spark  # noqa:
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+SF_BENCH = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="session")

@@ -48,7 +48,8 @@ def main() -> None:
     from simple_land_registry_data_ingestion_spark.session import get_spark
 
     spark = get_spark(
-        app_name="floor-measure", extra_conf={"spark.driver.memory": "48g"}
+        app_name="floor-measure",
+        extra_conf={"spark.driver.memory": bench._driver_memory()},
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
